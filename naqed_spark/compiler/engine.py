@@ -304,24 +304,25 @@ class Engine:
         parquet scan as an ordinary pushed filter — a parameterized
         query costs exactly what its literal twin costs."""
         spec = bind_args(spec, params if params is not None else {})
-        # r17: the referenced-name over-approximation for the $asof
-        # payload prune (every sub-compile — $scalar inners, $from,
-        # set branches — works on sub-dicts of this spec, so one
-        # collection at the top covers them all)
-        self._spec_refnames = (
-            _collect_spec_strings(spec, set()) | _CATALOG_KEY_COLS
-        )
-        spec = self._resolve_scalars(spec)
+        # the referenced-name over-approximation for the $asof payload
+        # prune. Every sub-compile — $scalar inners, $from, set branches
+        # — works on sub-dicts of this spec, so one collection at the
+        # top covers them all; it travels as an argument, never as
+        # Engine state, so interleaved queries cannot see each other's.
+        refs = _collect_spec_strings(spec, set()) | _CATALOG_KEY_COLS
+        spec = self._resolve_scalars(spec, refs=refs)
         qs = parse_query(spec)
         if isinstance(qs, SetSpec):
-            return self._compile_set(qs)
+            return self._compile_set(qs, refs=refs)
         if isinstance(qs, StreamSpec):
             return self._compile_stream(qs)
         if isinstance(qs, StreamStreamJoinSpec):
             return self._compile_stream_join(qs)
-        return self._compile(qs)
+        return self._compile(qs, refs=refs)
 
-    def _resolve_scalars(self, obj: object) -> object:
+    def _resolve_scalars(
+        self, obj: object, *, refs: "set | None" = None
+    ) -> object:
         """$scalar (round 14, M23 engine-half): ``{"$scalar": <spec>}``
         anywhere a literal is legal — filter/where/having operands,
         $limit, $if branches — runs the inner query and substitutes its
@@ -355,15 +356,16 @@ class Engine:
                     # uncorrelated $scalar inside it still resolves
                     # when the engine compiles the inner spec.
                     return obj
-                inner = self._resolve_scalars(inner)
+                inner = self._resolve_scalars(inner, refs=refs)
                 iqs = parse_query(inner)
                 if isinstance(iqs, (StreamSpec, StreamStreamJoinSpec)):
                     raise SpecError(
                         "$scalar cannot wrap a $stream/$stream_join"
                         " query"
                     )
-                idf = (self._compile_set(iqs)
-                       if isinstance(iqs, SetSpec) else self._compile(iqs))
+                idf = (self._compile_set(iqs, refs=refs)
+                       if isinstance(iqs, SetSpec)
+                       else self._compile(iqs, refs=refs))
                 if len(idf.columns) != 1:
                     raise SpecError(
                         f"$scalar subquery must produce exactly one"
@@ -387,9 +389,11 @@ class Engine:
                 elif isinstance(v, (_dt.date, _dt.datetime)):
                     v = v.isoformat()
                 return v
-            return {k: self._resolve_scalars(x) for k, x in obj.items()}
+            return {
+                k: self._resolve_scalars(x, refs=refs) for k, x in obj.items()
+            }
         if isinstance(obj, list):
-            return [self._resolve_scalars(x) for x in obj]
+            return [self._resolve_scalars(x, refs=refs) for x in obj]
         return obj
 
     def _compile_stream(self, ss: StreamSpec) -> DataFrame:
@@ -644,7 +648,9 @@ class Engine:
         )
         return _run_to_memory(out, self.spark, "append")
 
-    def _compile_set(self, ss: SetSpec) -> DataFrame:
+    def _compile_set(
+        self, ss: SetSpec, *, refs: "set | None" = None
+    ) -> DataFrame:
         """Set-operation combine (round 7). Scale shape: the union itself is
         a zero-shuffle concat of the branch plans; the DISTINCT variants
         ($union/$intersect/$except) shuffle once on the full row — Spark
@@ -652,7 +658,8 @@ class Engine:
         exchange. Branches are aligned BY NAME before the positional
         combine so field order in the spec never changes semantics."""
         frames = [
-            self._compile_set(b) if isinstance(b, SetSpec) else self._compile(b)
+            self._compile_set(b, refs=refs) if isinstance(b, SetSpec)
+            else self._compile(b, refs=refs)
             for b in ss.branches
         ]
         first_cols = frames[0].columns
@@ -699,7 +706,8 @@ class Engine:
         return df
 
     def _apply_correlated_scalar(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, *,
+        refs: "set | None" = None,
     ) -> DataFrame:
         """M25 (round 15): lower a correlated scalar comparison to the
         classic decorrelation. Scale shape: the inner spec is a grouped
@@ -735,9 +743,9 @@ class Engine:
                     f"$scalar.$on: no such outer column {oc!r} on"
                     f" {entity!r} (have {sorted(df.columns)})"
                 )
-        inner = self._resolve_scalars(cs.inner)
+        inner = self._resolve_scalars(cs.inner, refs=refs)
         iqs = parse_query(inner)
-        idf = self._compile(iqs)
+        idf = self._compile(iqs, refs=refs)
         keys = list(cs.on)
         missing = [ic for ic in keys if ic not in idf.columns]
         if missing:
@@ -779,7 +787,9 @@ class Engine:
             .drop("__t_cs_v", *[f"__t_cs_{ic}" for ic in keys])
         )
 
-    def _apply_node_filters(self, df: DataFrame, node: Node) -> DataFrame:
+    def _apply_node_filters(
+        self, df: DataFrame, node: Node, *, refs: "set | None" = None
+    ) -> DataFrame:
         """One spelling of the $filter split, shared by the scan path
         and the post-$traverse path: plain predicates first (they push
         to the scan / prune the traversed frame), then the correlated-
@@ -792,18 +802,22 @@ class Engine:
             df = _apply_predicate(df, pred)
         for pred in node.filters:
             if isinstance(pred.value, CorrelatedScalar):
-                df = self._apply_correlated_scalar(df, pred, node.entity)
+                df = self._apply_correlated_scalar(
+                    df, pred, node.entity, refs=refs
+                )
         for pred in node.filters:
             # M39: membership joins run LAST — the plain predicates
             # above already pruned the probe side, so the semi/anti
             # join scans the smallest frame
             if isinstance(pred.value, SubqueryIn):
-                df = self._apply_in_query(df, pred, node.entity)
+                df = self._apply_in_query(df, pred, node.entity, refs=refs)
             elif isinstance(pred.value, ExistsQuery):
-                df = self._apply_exists_query(df, pred, node.entity)
+                df = self._apply_exists_query(df, pred, node.entity, refs=refs)
         return df
 
-    def _compile_join_frames(self, js: "JoinFramesSpec") -> DataFrame:
+    def _compile_join_frames(
+        self, js: "JoinFramesSpec", *, refs: "set | None" = None
+    ) -> DataFrame:
         """M41: ad-hoc equi-join of two compiled query frames.
 
         Result columns = left columns + right NON-KEY columns; for
@@ -817,10 +831,10 @@ class Engine:
 
         def side(s):
             if isinstance(s, JoinFramesSpec):
-                return self._compile_join_frames(s)
+                return self._compile_join_frames(s, refs=refs)
             if isinstance(s, SetSpec):
-                return self._compile_set(s)
-            return self._compile(s)
+                return self._compile_set(s, refs=refs)
+            return self._compile(s, refs=refs)
 
         left, right = side(js.left), side(js.right)
         for lc in js.on:
@@ -882,7 +896,8 @@ class Engine:
         return joined.drop(*tmp.values())
 
     def _apply_exists_query(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, *,
+        refs: "set | None" = None,
     ) -> DataFrame:
         """M43: multi-key correlated EXISTS — LEFT SEMI (or ANTI for
         $not_exists_query) on EVERY $on equi pair. Scale shape: one
@@ -901,9 +916,9 @@ class Engine:
                     f" {disp} (have {sorted(df.columns)})"
                 )
         inner = (
-            self._compile_set(eq.inner)
+            self._compile_set(eq.inner, refs=refs)
             if isinstance(eq.inner, SetSpec)
-            else self._compile(eq.inner)
+            else self._compile(eq.inner, refs=refs)
         )
         for ic in eq.on:
             if ic not in inner.columns:
@@ -940,7 +955,8 @@ class Engine:
         return df.join(keys, cond, how)
 
     def _apply_in_query(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, *,
+        refs: "set | None" = None,
     ) -> DataFrame:
         """M39: {col: {"$in_query"/"$not_in_query": spec}} — LEFT SEMI
         / LEFT ANTI join against the subquery's single output column.
@@ -961,9 +977,9 @@ class Engine:
                 f" (have {sorted(df.columns)})"
             )
         inner = (
-            self._compile_set(sq.inner)
+            self._compile_set(sq.inner, refs=refs)
             if isinstance(sq.inner, SetSpec)
-            else self._compile(sq.inner)
+            else self._compile(sq.inner, refs=refs)
         )
         op_name = "$not_in_query" if sq.negate else "$in_query"
         if len(inner.columns) != 1:
@@ -997,10 +1013,11 @@ class Engine:
 
     # -- compilation -------------------------------------------------------
     def _load_filtered(
-        self, node: Node, sample: "SampleSpec | None" = None
+        self, node: Node, sample: "SampleSpec | None" = None, *,
+        refs: "set | None" = None,
     ) -> DataFrame:
         df = self.catalog.entity(node.entity)
-        df = self._apply_node_filters(df, node)
+        df = self._apply_node_filters(df, node, refs=refs)
         if sample is not None:
             # $sample (round 7): deterministic md5-bucket sample of the
             # ROOT entity, applied at the scan — after ALL of $filter
@@ -1071,7 +1088,7 @@ class Engine:
 
     def _compile_node(
         self, node: Node, sample: "SampleSpec | None" = None,
-        base: "DataFrame | None" = None,
+        base: "DataFrame | None" = None, *, refs: "set | None" = None,
     ) -> tuple[DataFrame, list[str]]:
         """Compile a traversal subtree to (DataFrame, requested columns).
 
@@ -1084,14 +1101,14 @@ class Engine:
         if base is not None:
             # post-$traverse: the shared $filter split applies to the
             # traversed frame (a correlated $scalar joins against it)
-            df = self._apply_node_filters(base, node)
+            df = self._apply_node_filters(base, node, refs=refs)
         else:
-            df = self._load_filtered(node, sample)
+            df = self._load_filtered(node, sample, refs=refs)
         cols = list(node.fields)
         for rel_name, child in node.children:
             rel = self.catalog.relationship(node.entity, rel_name)
             child.entity = rel.dst
-            child_df, child_cols = self._compile_node(child)
+            child_df, child_cols = self._compile_node(child, refs=refs)
             if child.collect:
                 # $collect re-nest (naqed's array-of-children shape): one
                 # parent row, children as a sorted array — a pre-join
@@ -1333,13 +1350,10 @@ class Engine:
                     # sf0.1; pruned struct 1.7× faster — the fan-out
                     # rows no longer copy the unreferenced heavy
                     # payload columns into aggregation buffers).
-                    refs = getattr(self, "_spec_refnames", None)
-
+                    # refs None: no spec to prune against, keep all
                     def _keep(c):
                         return (
-                            refs is None
-                            or c in refs
-                            or c.startswith("__")
+                            refs is None or c in refs or c.startswith("__")
                         )
 
                     names = [
@@ -1917,20 +1931,22 @@ class Engine:
                 col = col.cast("double")
         return col
 
-    def _traverse_frame(self, entity: str, tr: TraverseSpec) -> DataFrame:
-        """$traverse (round 14, M19): BFS reachability to max-depth or
-        fixpoint, compiling to the verified DataFrame-Pregel shape the
-        §2-I graph keys carry (graph_reachability_bfs): per superstep
-        ONE equi-join of the frontier against the edge set (shuffled on
-        vertex id; at 100 TB edges are pre-partitioned by src and the
-        tiny frontier broadcasts under AQE) + a distinct + an anti-join
-        against visited, with ``localCheckpoint()`` per superstep to
-        cut lineage (the plan doubles per iteration otherwise) and
-        O(1) retained pinned state via trim_pins. Returns the root
+    def _traverse_frame(
+        self, entity: str, tr: TraverseSpec, *, refs: "set | None" = None
+    ) -> DataFrame:
+        """$traverse (round 14, M19): reachability to max-depth or
+        fixpoint on the one superstep driver (``session.pregel``), the
+        shape the §2-I graph keys carry: per superstep ONE equi-join of
+        the frontier against the edge set (shuffled on vertex id; at
+        100 TB edges are pre-partitioned by src and the tiny frontier
+        broadcasts under AQE) + a distinct + an anti-join against
+        visited. The state is the visited set and carries its own
+        frontier (``__t_d == i-1``; with $weight, the ``__t_chg`` flag of
+        the vertices whose cost improved), so each superstep is one
+        checkpoint and the halt count rides on it. Returns the root
         entity's rows restricted to the reached set, plus the min-hop
-        depth column ``tr.alias`` (0 on seeds)."""
-        from naqed_spark.queries._util import low_shuffle
-        from naqed_spark.session import persistent_rdd_ids, trim_pins
+        depth (or min cost) column ``tr.alias`` (0 on seeds)."""
+        from naqed_spark.session import FixpointError, pregel
 
         pk = PRIMARY_KEYS.get(entity)
         if pk is None:
@@ -1991,7 +2007,7 @@ class Engine:
                 F.col(prefix + pk).alias("dst"),
             ).distinct()
         else:
-            sub = self._compile(tr.edges)
+            sub = self._compile(tr.edges, refs=refs)
             need = [tr.src, tr.dst] + ([tr.weight] if tr.weight else [])
             for c in need:
                 if c not in sub.columns:
@@ -2013,101 +2029,96 @@ class Engine:
             edges = sub.select(*sel).where(cond).distinct()
 
         edges = edges.persist()
-        try:
-            edges.count()  # materialize before base so trim can't sweep it
-            base = persistent_rdd_ids(self.spark)
-            cap = tr.max_depth if tr.max_depth is not None else 100
-            converged = tr.max_depth is not None
+        cap = tr.max_depth if tr.max_depth is not None else 100
+
+        def active(i):
+            # with $max_depth the cap is part of the answer: nothing is
+            # active after the last permitted superstep
+            if tr.max_depth is not None and i >= cap:
+                return F.lit(False)
             if tr.weight is not None:
-                # M22 (round 14, engine-half): cheapest-path mode — frontier
-                # Bellman-Ford, the verified graph_shortest_path_weighted
-                # shape with the frontier optimization: each round relaxes
-                # ONLY from vertices whose best cost improved last round
-                # (one equi-join + per-vertex min + an improvement
-                # anti-check), so a converged region stops costing joins.
-                # Integer weights stay in exact BIGINT; fractional weights
-                # run in double (per-path accumulation is left-to-right in
-                # both engines — deterministic per path; min across paths
-                # is order-free).
-                wt = dict(
-                    (f.name, f.dataType.simpleString()) for f in edges.schema
-                )["w"]
-                cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
-                                             "bigint") else "double")
-                best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
-                frontier = best
-                with low_shuffle(self.spark):
-                    for _ in range(1, cap + 1):
-                        cand = (
-                            frontier.join(edges, frontier.v == edges.src)
-                            .select(
-                                F.col("dst").alias("v"),
-                                (F.col("__t_d")
-                                 + F.col("w").cast(cost_t)).alias("__t_d"),
-                            )
-                            .groupBy("v")
-                            .agg(F.min("__t_d").alias("__t_d"))
-                        )
-                        old = best.select("v", F.col("__t_d").alias("__t_old"))
-                        improved = (
-                            cand.join(old, "v", "left")
-                            .where(F.col("__t_old").isNull()
-                                   | (F.col("__t_d") < F.col("__t_old")))
-                            .select("v", "__t_d")
-                            .localCheckpoint()  # cut lineage per round
-                        )
-                        if improved.isEmpty():
-                            converged = True
-                            break
-                        best = (
-                            best.unionAll(improved)
-                            .groupBy("v")
-                            .agg(F.min("__t_d").alias("__t_d"))
-                            .localCheckpoint()
-                        )
-                        frontier = improved
-                        trim_pins(self.spark, base, keep=2)
-                visited = best
-            else:
-                visited = seeds.select("v", F.lit(0).alias("__t_d"))
-                frontier = visited
-                with low_shuffle(self.spark):
-                    for depth in range(1, cap + 1):
-                        nxt = (
-                            frontier.join(edges, frontier.v == edges.src)
-                            .select(F.col("dst").alias("v"))
-                            .distinct()
-                            .join(visited.select("v"), "v", "left_anti")
-                            .select("v", F.lit(depth).alias("__t_d"))
-                            .localCheckpoint()  # cut lineage per superstep
-                        )
-                        if nxt.isEmpty():
-                            converged = True
-                            break
-                        visited = visited.unionAll(nxt).localCheckpoint()
-                        frontier = nxt
-                        trim_pins(self.spark, base, keep=2)
-        finally:
-            # unpersist even when a Spark error escapes the
-            # superstep loop — a leaked pinned edge set would
-            # otherwise live for the session lifetime
-            edges.unpersist()
-        if not converged:
+                return F.col("__t_chg")
+            return F.col("__t_d") == i
+
+        if tr.weight is not None:
+            # M22 (round 14, engine-half): cheapest-path mode — frontier
+            # Bellman-Ford (graph_shortest_path_weighted's shape): each
+            # round relaxes ONLY from vertices whose best cost improved
+            # last round, and the min aggregate also yields the new
+            # improvement flag, so a converged region stops costing
+            # joins. Integer weights stay in exact BIGINT; fractional
+            # weights run in double (per-path accumulation is
+            # left-to-right in both engines — deterministic per path;
+            # min across paths is order-free).
+            wt = dict(
+                (f.name, f.dataType.simpleString()) for f in edges.schema
+            )["w"]
+            cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
+                                         "bigint") else "double")
+
+            def step(best, _):
+                cand = (
+                    best.filter("__t_chg")
+                    .join(edges, F.col("v") == F.col("src"))
+                    .select(
+                        F.col("dst").alias("v"),
+                        (F.col("__t_d")
+                         + F.col("w").cast(cost_t)).alias("__t_d"),
+                        F.lit(None).alias("__t_old"),
+                    )
+                )
+                return (
+                    best.select("v", "__t_d", F.col("__t_d").alias("__t_old"))
+                    .unionAll(cand)
+                    .groupBy("v")
+                    .agg(F.min("__t_d").alias("__t_d"),
+                         F.max("__t_old").alias("__t_old"))
+                    .select("v", "__t_d",
+                            (F.col("__t_old").isNull()
+                             | (F.col("__t_d") < F.col("__t_old")))
+                            .alias("__t_chg"))
+                )
+
+            start = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"),
+                                 F.lit(True).alias("__t_chg"))
+        else:
+            def step(visited, i):
+                nxt = (
+                    visited.filter(F.col("__t_d") == i - 1)
+                    .join(edges, F.col("v") == F.col("src"))
+                    .select(F.col("dst").alias("v"))
+                    .distinct()
+                    .join(visited, "v", "left_anti")
+                    .select("v", F.lit(i).alias("__t_d"))
+                )
+                return visited.unionAll(nxt)
+
+            start = seeds.select("v", F.lit(0).alias("__t_d"))
+
+        try:
+            visited = pregel(self.spark, start, step, cap, active=active)
+        except FixpointError as e:
             raise SpecError(
                 f"$traverse did not reach fixpoint within {cap}"
                 f" supersteps — the graph's diameter exceeds the safety"
                 f" cap (or, with $weight, costs keep improving — a"
                 f" negative cycle); set $max_depth to bound the search"
                 f" explicitly"
-            )
-        reached = visited.withColumnRenamed("v", "__t_v")
+            ) from e
+        finally:
+            # the result is a checkpoint; release the edge cache even
+            # when a Spark error escapes the loop
+            edges.unpersist()
+        reached = visited.select(F.col("v").alias("__t_v"), "__t_d")
         return (
             ent.join(reached, ent[pk] == reached["__t_v"])
             .drop("__t_v")
             .withColumnRenamed("__t_d", tr.alias)
         )
 
-    def _compile(self, qs: QuerySpec) -> DataFrame:
+    def _compile(
+        self, qs: QuerySpec, *, refs: "set | None" = None
+    ) -> DataFrame:
         base_frame = None
         if qs.from_inner is not None:
             # M35 (round 16b): the root frame is the compiled INNER
@@ -2120,11 +2131,11 @@ class Engine:
             # 100 TB-safe.
             inner = qs.from_inner
             if isinstance(inner, JoinFramesSpec):
-                base_frame = self._compile_join_frames(inner)
+                base_frame = self._compile_join_frames(inner, refs=refs)
             elif isinstance(inner, SetSpec):
-                base_frame = self._compile_set(inner)
+                base_frame = self._compile_set(inner, refs=refs)
             else:
-                base_frame = self._compile(inner)
+                base_frame = self._compile(inner, refs=refs)
             missing = [
                 f for f in qs.root.fields if f not in base_frame.columns
             ]
@@ -2134,8 +2145,12 @@ class Engine:
                     f" result (have {sorted(base_frame.columns)})"
                 )
         if qs.traverse is not None:
-            base_frame = self._traverse_frame(qs.root.entity, qs.traverse)
-        df, cols = self._compile_node(qs.root, qs.sample, base=base_frame)
+            base_frame = self._traverse_frame(
+                qs.root.entity, qs.traverse, refs=refs
+            )
+        df, cols = self._compile_node(
+            qs.root, qs.sample, base=base_frame, refs=refs
+        )
         # $select computed columns land before aggregation, so $groupby/
         # $agg/$orderby can reference them like any field; without an agg
         # they join the projection after the requested fields.

@@ -17,8 +17,6 @@ Cross-engine hash-match conventions used by every checked query:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, functions as F
 
 from naqed_spark.catalog import load  # re-export for query modules
@@ -32,7 +30,6 @@ __all__ = [
     "dsum",
     "r4",
     "r6",
-    "low_shuffle",
     "scoped_persist",
     "release_scoped_persists",
     "session_fragment",
@@ -200,18 +197,3 @@ def r4(c: Column) -> Column:
 
 def r6(c: Column) -> Column:
     return F.round(c, 6)
-
-
-@contextmanager
-def low_shuffle(spark, n: int = 8):
-    """Temporarily drop shuffle parallelism for driver-side iterative loops
-    (Pregel supersteps, streaming replays) whose per-step data is tiny —
-    task-launch overhead dominates there. Only effective for actions that
-    EXECUTE inside the block (localCheckpoint/count); the query's final
-    lazy DataFrame still runs at the session setting."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

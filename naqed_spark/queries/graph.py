@@ -2,10 +2,15 @@
 
 The reference's identity is typed-entity traversal (resolver edges ≈ FK
 edges); the north star adds "GraphX/Pregel for analytics". GraphX has no
-Python API, so iterative algorithms are DataFrame-Pregel: a driver-side
-loop over declarative joins/aggregations with localCheckpoint() per
-iteration to cut lineage (SURVEY §4.3 — without it the plan doubles every
-superstep and the optimizer dies long before the data does).
+Python API, so every iterative algorithm here runs on the one superstep
+driver, ``session.pregel``: each superstep is a join plus group-by over
+the vertex state and the edge relation, materialized by ONE eager
+localCheckpoint (without it the plan doubles every superstep and the
+optimizer dies long before the data does). The state carries its own
+frontier (BFS: ``d == i-1``; label propagation: a ``changed`` flag from
+the same aggregate), so the halt count is observed on that checkpoint
+job and no superstep runs a separate isEmpty/count job. Each loop
+builds its edge relation once, before the loop.
 
 Graphs used:
   - user-interaction graph: directed edge u→v when v emitted an event with
@@ -17,9 +22,9 @@ Graphs used:
 
 Scale notes: every superstep is one equi-join (frontier ⋈ edges, shuffled
 on vertex id) + one hash agg — the aggregateMessages shape. State per
-vertex is O(1). At 100 TB you partition edges by src and persist the
-frontier; both noted inline. Iteration caps are explicit and mirrored in
-the recursive-CTE oracles so both engines bound the same search space.
+vertex is O(1) and pregel keeps one checkpoint live. At 100 TB you
+partition edges by src. Iteration caps are explicit and mirrored in the
+recursive-CTE oracles so both engines bound the same search space.
 """
 
 from __future__ import annotations
@@ -31,7 +36,6 @@ from naqed_spark.queries._util import (
     dsum,
     epoch_us,
     load,
-    low_shuffle,
     r6,
     scoped_persist,
     session_fragment,
@@ -39,6 +43,7 @@ from naqed_spark.queries._util import (
     spread,
 )
 from naqed_spark.registry import query
+from naqed_spark.session import checkpoint_rdd_id, pregel, unpersist_rdds
 
 HOUR_US = 3600 * 1000 * 1000
 
@@ -131,6 +136,82 @@ def user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scoped_persist(ev)
     return scoped_persist(edges)
+
+
+def _symmetric(e: DataFrame) -> DataFrame:
+    """Undirected closure (src, dst) of a directed edge set, built in ONE
+    pass over ``e``: each edge explodes into both orientations. A union
+    of two projections would plan the whole input subtree twice."""
+    both = F.array(
+        F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    )
+    return e.select(F.explode(both).alias("e")).select("e.*").distinct()
+
+
+def _bfs(spark, start, edges, cap, keys=()):
+    """Min-hop BFS along ``edges`` (src, dst) from ``start`` rows
+    (*keys, v, d=0), at most ``cap`` hops; ``keys`` run independent
+    searches side by side (one per seed). The state is the visited set
+    itself and the frontier is ``d == i-1``: per superstep one frontier
+    ⋈ edges equi-join + distinct + anti-join against visited. The cap
+    is part of the answer, so the last superstep reports no frontier."""
+    keys = list(keys)
+
+    def expand(seen, i):
+        nxt = (
+            seen.filter(F.col("d") == i - 1)
+            .join(edges, F.col("v") == F.col("src"))
+            .select(*keys, F.col("dst").alias("v"))
+            .distinct()
+            .join(seen, keys + ["v"], "left_anti")
+            .select(*keys, "v", F.lit(i).alias("d"))
+        )
+        return seen.unionAll(nxt)
+
+    return pregel(
+        spark, start, expand, cap,
+        active=lambda i: F.col("d") == i if i < cap else F.lit(False),
+    )
+
+
+def _min_label(spark, verts, edges, cap=20):
+    """(v, lab, changed): lab = the min vertex id that reaches v along
+    ``edges`` (src → dst) inside the vertex set ``verts`` (v) — connected
+    components on a symmetric edge set, one half of the SCC coloring on
+    a directed one. Label and ``changed`` come out of the same aggregate
+    and only changed vertices send, so a converged region stops costing
+    joins; messages to vertices outside ``verts`` drop at the aggregate.
+    Raises on non-convergence: silent non-minimal labels are worse than
+    a loud stop."""
+
+    def propagate(lab, _):
+        msgs = (
+            lab.filter("changed")
+            .join(edges, F.col("v") == F.col("src"))
+            .select(F.col("dst").alias("v"), "lab", F.lit(None).alias("own"))
+        )
+        return (
+            lab.select("v", "lab", F.col("lab").alias("own"))
+            .unionAll(msgs)
+            .groupBy("v")
+            .agg(F.min("lab").alias("lab"), F.max("own").alias("own"))
+            .where(F.col("own").isNotNull())
+            .select("v", "lab", (F.col("lab") < F.col("own")).alias("changed"))
+        )
+
+    start = verts.select("v", F.col("v").alias("lab"), F.lit(True).alias("changed"))
+    return pregel(spark, start, propagate, cap, active=F.col("changed"))
+
+
+def components(spark, edges):
+    """(v, lab): connected components of the undirected graph over the
+    (src, dst) pairs ``edges``, labelled by their min vertex id."""
+    sym = _symmetric(edges).persist()
+    try:
+        return _min_label(spark, sym.select(F.col("src").alias("v")).distinct(), sym)
+    finally:
+        sym.unpersist()  # the result is a checkpoint; sym is spent
 
 
 @query(
@@ -264,37 +345,10 @@ def graph_khop_fixed(spark, sf_dir):
     """,
 )
 def graph_reachability_bfs(spark, sf_dir):
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    ue = user_edges(spark, sf_dir).persist()
-    ue.count()  # materialize the edge cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    visited = (
-        ue.sparkSession.range(1)
-        .select(F.lit(0).cast("bigint").alias("v"), F.lit(0).alias("d"))
+    start = spark.range(1).select(
+        F.lit(0).cast("bigint").alias("v"), F.lit(0).alias("d")
     )
-    frontier = visited
-    # per-superstep state is tiny; task-launch overhead dominates at full
-    # parallelism — supersteps execute inside the block, so low_shuffle
-    # applies to every localCheckpoint
-    with low_shuffle(spark):
-        for depth in range(1, 11):
-            nxt = (
-                frontier.join(ue, frontier.v == ue.src)
-                .select(F.col("dst").alias("v"))
-                .distinct()
-                .join(visited.select("v"), "v", "left_anti")
-                .select("v", F.lit(depth).alias("d"))
-                .localCheckpoint()  # cut lineage: doubles per superstep else
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionAll(nxt).localCheckpoint()
-            frontier = nxt
-            # O(1) retained state (VERDICT r6 item 7): the two newest pins
-            # are exactly {nxt, visited}; prior supersteps are folded in.
-            trim_pins(spark, base, keep=2)
-    ue.unpersist()
+    visited = _bfs(spark, start, user_edges(spark, sf_dir), 10)
     return visited.select(F.col("v").alias("user_id"), F.col("d").alias("dist"))
 
 
@@ -339,33 +393,43 @@ def _nation_edges(spark, sf_dir):
     """,
 )
 def graph_shortest_path_weighted(spark, sf_dir):
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
     ne = scoped_persist(_nation_edges(spark, sf_dir))
-    ne.count()  # materialize the edge cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    # Bellman-Ford: relax all edges each round; ≤6 rounds mirrors the CTE cap
-    dist = (
-        ne.sparkSession.range(1)
-        .select(F.lit(0).cast("int").alias("v"), F.lit(0).cast("bigint").alias("cost"))
+
+    def relax(best, _):
+        # frontier Bellman-Ford: only vertices that improved last round
+        # relax their edges; ``changed`` comes out of the min aggregate
+        cand = (
+            best.filter("changed")
+            .join(ne, F.col("v") == F.col("src"))
+            .select(
+                F.col("dst").alias("v"),
+                (F.col("cost") + F.col("w")).alias("cost"),
+                F.lit(None).alias("old"),
+            )
+        )
+        return (
+            best.select("v", "cost", F.col("cost").alias("old"))
+            .unionAll(cand)
+            .groupBy("v")
+            .agg(F.min("cost").alias("cost"), F.max("old").alias("old"))
+            .select(
+                "v",
+                "cost",
+                (F.col("old").isNull() | (F.col("cost") < F.col("old")))
+                .alias("changed"),
+            )
+        )
+
+    start = spark.range(1).select(
+        F.lit(0).cast("int").alias("v"),
+        F.lit(0).cast("bigint").alias("cost"),
+        F.lit(True).alias("changed"),
     )
-    with low_shuffle(spark):
-        for _ in range(6):
-            relaxed = (
-                dist.join(ne, dist.v == ne.src)
-                .select(
-                    F.col("dst").alias("v"),
-                    (F.col("cost") + F.col("w")).alias("cost"),
-                )
-            )
-            dist = (
-                dist.unionAll(relaxed)
-                .groupBy("v")
-                .agg(F.min("cost").alias("cost"))
-                .localCheckpoint()
-            )
-            # only the newest checkpoint (dist) is live (VERDICT r6 item 7)
-            trim_pins(spark, base, keep=1)
+    # ≤6 rounds mirrors the CTE's hop cap
+    dist = pregel(
+        spark, start, relax, 6,
+        active=lambda i: F.col("changed") if i < 6 else F.lit(False),
+    )
     return dist.select(F.col("v").alias("nationkey"), F.col("cost").alias("dist"))
 
 
@@ -386,48 +450,9 @@ def graph_shortest_path_weighted(spark, sf_dir):
     """,
 )
 def graph_connected_components(spark, sf_dir):
-    ue = user_edges(spark, sf_dir)
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    sym = (
-        ue.select("src", "dst")
-        .union(ue.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    sym.count()  # materialize the cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label"))
-    )
-    with low_shuffle(spark):
-        for _ in range(20):
-            # candidate label per vertex: min(own, min over in-neighbors)
-            msgs = (
-                labels.join(sym, labels.v == sym.src)
-                .select(F.col("dst").alias("v"), F.col("label"))
-            )
-            new_labels = (
-                labels.unionAll(msgs)
-                .groupBy("v")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
-            )
-            if new_labels.join(
-                labels,
-                (new_labels.v == labels.v) & (new_labels.label != labels.label),
-            ).isEmpty():
-                labels = new_labels
-                break
-            labels = new_labels
-            # the convergence join above already consumed the prior
-            # checkpoint; only the newest (labels) stays live (r6 item 7)
-            trim_pins(spark, base, keep=1)
-    sym.unpersist()
+    labels = components(spark, user_edges(spark, sf_dir))
     return labels.select(
-        F.col("v").alias("user_id"), F.col("label").alias("component")
+        F.col("v").alias("user_id"), F.col("lab").alias("component")
     )
 
 
@@ -473,57 +498,45 @@ def graph_pagerank_fixed(spark, sf_dir):
     engines) so cross-engine summation-order error cannot compound — this is
     what lets a 10-deep iterative float computation hash-match its oracle.
     Tests additionally assert sum(pr)≈1."""
-    ue = user_edges(spark, sf_dir).persist()
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
+    ue = user_edges(spark, sf_dir)
+    verts = scoped_persist(
+        ue.select(F.explode(F.array("src", "dst")).alias("v")).distinct()
     )
-    verts = scoped_persist(verts)
-    n = verts.count()  # also materializes both caches BEFORE base (trim safety)
+    n = verts.count()
     if n == 0:
         # empty edge set → no vertices, no mass to distribute (and 1/n is
         # undefined): the empty frame with the output schema IS the answer.
-        ue.unpersist()
         return verts.select("v", F.lit(0.0).alias("pagerank"))
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    base = persistent_rdd_ids(spark)
     outdeg = ue.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("odeg")
     )
-    ranks = verts.select("v", F.lit(1.0 / n).alias("pr"))
-    with low_shuffle(spark):
-        for _ in range(10):
-            contrib_df = (
-                ranks.join(outdeg, "v")
-                .join(ue, ranks.v == ue.src)
-                .select(F.col("dst").alias("v"), (F.col("pr") / F.col("odeg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("inflow"))
+
+    def iterate(ranks, _):
+        inflow = (
+            ranks.join(outdeg, "v")
+            .join(ue, F.col("v") == F.col("src"))
+            .select(F.col("dst").alias("v"), (F.col("pr") / F.col("odeg")).alias("c"))
+            .groupBy("v")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        dangling = ranks.join(outdeg, "v", "left_anti").agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
+        )
+        return (
+            verts.join(inflow, "v", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "v",
+                F.round(
+                    F.lit(0.15) / n
+                    + F.lit(0.85)
+                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("mass") / n),
+                    6,
+                ).alias("pr"),
             )
-            dangling = (
-                ranks.join(outdeg, "v", "left_anti").agg(
-                    F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
-                )
-            )
-            ranks = (
-                verts.join(contrib_df, "v", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "v",
-                    F.round(
-                        F.lit(0.15) / n
-                        + F.lit(0.85)
-                        * (F.coalesce("inflow", F.lit(0.0)) + F.col("mass") / n),
-                        6,
-                    ).alias("pr"),
-                )
-                .localCheckpoint()
-            )
-            # only the newest checkpoint (ranks) is live (VERDICT r6 item 7)
-            trim_pins(spark, base, keep=1)
-    ue.unpersist()
+        )
+
+    ranks = pregel(spark, verts.select("v", F.lit(1.0 / n).alias("pr")), iterate, 10)
     return ranks.select("v", F.col("pr").alias("pagerank"))
 
 
@@ -646,49 +659,6 @@ def graph_aggregate_messages(spark, sf_dir):
     )
 
 
-def _min_reach_fixpoint(verts, edges, along, spark, cap=20):
-    """Min-label propagation to fixpoint: label(u) = min vertex id that can
-    reach u along ``along`` ('fwd': messages flow src→dst; 'bwd': dst→src),
-    restricted to the given vertex/edge subgraph. One equi-join + hash agg
-    per superstep (the aggregateMessages shape), localCheckpoint per step
-    to cut lineage; raises on non-convergence (llm_dedup_groups
-    precedent — silent wrong labels are worse than a loud stop)."""
-    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
-
-    src, dst = ("src", "dst") if along == "fwd" else ("dst", "src")
-    before = persistent_rdd_ids(spark)
-    lab = verts.select("v", F.col("v").alias("lab")).localCheckpoint()
-    for _ in range(cap):
-        msgs = (
-            edges.join(lab, edges[src] == lab["v"])
-            .groupBy(F.col(dst).alias("mv"))
-            .agg(F.min("lab").alias("m"))
-        )
-        new = (
-            lab.join(msgs, lab["v"] == msgs["mv"], "left")
-            .select("v", F.least("lab", "m").alias("lab"))
-            .localCheckpoint()
-        )
-        converged = (
-            lab.select("v", F.col("lab").alias("old"))
-            .join(new, "v")
-            .filter(F.col("lab") < F.col("old"))
-            .isEmpty()
-        )
-        # O(1) retained state per superstep (VERDICT r6 item 7, llm.py
-        # blocked-kernel precedent): `new` is an EAGER checkpoint and the
-        # changed-check above fully consumed the old `lab`, so free every
-        # id this fixpoint pinned except the newest (= new's checkpoint;
-        # RDD ids are monotonic). Ids pinned by the caller stay untouched.
-        mine = persistent_rdd_ids(spark) - before
-        if mine:
-            unpersist_rdds(spark, mine - {max(mine)})
-        lab = new
-        if converged:
-            return lab
-    raise RuntimeError(f"min-reach({along}) did not converge in {cap} supersteps")
-
-
 @query(
     "graph_scc",
     # Strongly connected components of the directed user-interaction
@@ -725,68 +695,42 @@ def graph_scc(spark, sf_dir):
     min-aggregation with O(1) state per vertex — at 100 TB edges are
     hash-partitioned by the join side and supersteps reuse that
     partitioning; no closure, nothing quadratic."""
-    ue = user_edges(spark, sf_dir).persist()
-    done = scc_labels(spark, ue)
-    ue.unpersist()
+    done = scc_labels(spark, user_edges(spark, sf_dir))
     return done.select(F.col("v").alias("user_id"), "scc")
 
 
 def scc_labels(spark, ue):
     """(v, scc) for every vertex of the directed edge set ``ue``
     (cols src, dst) — the coloring loop behind graph_scc, factored so
-    adversarial graphs can drive it directly (tests/test_graph.py)."""
-    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
+    adversarial graphs can drive it directly (tests/test_graph.py).
+    The outer state is every vertex with ``scc`` NULL until resolved;
+    each outer superstep runs the two min-label fixpoints over the
+    unresolved vertices (edges into resolved ones drop at the label
+    aggregate, so the edge set is never rebuilt)."""
+    verts = ue.select(F.explode(F.array("src", "dst")).alias("v")).distinct()
+    # a NULL of v's own type
+    start = verts.select("v", F.when(F.lit(False), F.col("v")).alias("scc"))
+    back = ue.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    spent = []  # the previous round's label checkpoints
 
-    base = persistent_rdd_ids(spark)
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = ue
-    done = None
-    with low_shuffle(spark):
-        for _ in range(30):
-            if verts.isEmpty():
-                break
-            fwd = _min_reach_fixpoint(verts, edges, "fwd", spark)
-            bwd = _min_reach_fixpoint(verts, edges, "bwd", spark)
-            resolved = (
-                fwd.join(
-                    bwd.select("v", F.col("lab").alias("blab")), "v"
-                )
-                .filter(F.col("lab") == F.col("blab"))
-                .select("v", F.col("lab").alias("scc"))
-                .localCheckpoint()
-            )
-            done = resolved if done is None else done.unionAll(resolved).localCheckpoint()
-            verts = (
-                verts.join(resolved.select("v"), "v", "left_anti")
-                .localCheckpoint()
-            )
-            edges = (
-                edges.join(verts.select(F.col("v").alias("src")), "src")
-                .join(verts.select(F.col("v").alias("dst")), "dst")
-                .select("src", "dst")
-                .localCheckpoint()
-            )
-            # O(1) retained state per outer round (VERDICT r6 item 7): all
-            # four frames above are eager checkpoints, so the prior round's
-            # done/verts/edges (and this round's fwd/bwd/resolved, already
-            # folded into them) are consumed. Ids are monotonic — the three
-            # newest pins are exactly {done, verts, edges} (round 1: done IS
-            # resolved, still among the top three); free the rest.
-            mine = persistent_rdd_ids(spark) - base
-            live = set(sorted(mine)[-3:])
-            unpersist_rdds(spark, mine - live)
-        # ADVICE r6: the old for/else raised even when round 30 resolved the
-        # last vertex (the empty-check only ran at the TOP of the next
-        # round), so re-check emptiness after the loop instead.
-        if not verts.isEmpty():
-            raise RuntimeError("graph_scc did not converge in 30 rounds")
-    if done is None:  # no edges at all -> no vertices, empty (v, scc) frame
-        return verts.select("v", F.col("v").alias("scc"))
+    def color(state, _):
+        # the previous outer checkpoint consumed them (it is eager)
+        unpersist_rdds(spark, [checkpoint_rdd_id(f) for f in spent])
+        live = state.filter(F.col("scc").isNull()).select("v")
+        fwd = _min_label(spark, live, ue)
+        bwd = _min_label(spark, live, back)
+        spent[:] = [fwd, bwd]
+        resolved = (
+            fwd.join(bwd.select("v", F.col("lab").alias("blab")), "v")
+            .filter(F.col("lab") == F.col("blab"))
+            .select("v", F.col("lab").alias("hit"))
+        )
+        return state.join(resolved, "v", "left").select(
+            "v", F.coalesce("scc", "hit").alias("scc")
+        )
+
+    done = pregel(spark, start, color, 30, active=F.col("scc").isNull())
+    unpersist_rdds(spark, [checkpoint_rdd_id(f) for f in spent])
     return done
 
 
@@ -1031,21 +975,14 @@ def graph_personalized_pagerank(spark, sf_dir):
     8 fixed iterations, d=0.85, per-iteration round(6) on both engines
     (the graph_pagerank_fixed discipline). Scale shape identical to
     global PageRank — one frontier⋈edges equi-join + one hash agg per
-    superstep, O(1) retained state via localCheckpoint + trim — plus a
+    superstep, one pregel checkpoint live at a time — plus a
     broadcast seed vector. Zero-rank vertices are dropped at the end
     (at 100 TB a PPR result is seed-local: emitting the whole vertex set
     would be the scale bug)."""
-    ue = user_edges(spark, sf_dir).persist()
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
-        .persist()
+    ue = user_edges(spark, sf_dir)
+    verts = scoped_persist(
+        ue.select(F.explode(F.array("src", "dst")).alias("v")).distinct()
     )
-    verts.count()  # materialize before trim baseline
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    base = persistent_rdd_ids(spark)
     seeds = verts.select(
         "v",
         F.when(F.col("v") % 10 == 0, F.lit(1.0)).otherwise(0.0).alias("ind"),
@@ -1054,42 +991,41 @@ def graph_personalized_pagerank(spark, sf_dir):
     outdeg = ue.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("odeg")
     )
-    ranks = seeds.select("v", (F.col("ind") / k).alias("pr"))
-    with low_shuffle(spark):
-        for _ in range(8):
-            inflow = (
-                ranks.join(outdeg, "v")
-                .join(ue, ranks.v == ue.src)
-                .select(
-                    F.col("dst").alias("v"),
-                    (F.col("pr") / F.col("odeg")).alias("c"),
-                )
-                .groupBy("v")
-                .agg(F.sum("c").alias("inflow"))
+
+    def iterate(ranks, _):
+        inflow = (
+            ranks.join(outdeg, "v")
+            .join(ue, F.col("v") == F.col("src"))
+            .select(
+                F.col("dst").alias("v"),
+                (F.col("pr") / F.col("odeg")).alias("c"),
             )
-            dangling = ranks.join(outdeg, "v", "left_anti").agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
+            .groupBy("v")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        dangling = ranks.join(outdeg, "v", "left_anti").agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
+        )
+        return (
+            seeds.join(inflow, "v", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "v",
+                F.round(
+                    F.lit(0.15) * F.col("ind") / k
+                    + F.lit(0.85)
+                    * (
+                        F.coalesce("inflow", F.lit(0.0))
+                        + F.col("mass") * F.col("ind") / k
+                    ),
+                    6,
+                ).alias("pr"),
             )
-            ranks = (
-                seeds.join(inflow, "v", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "v",
-                    F.round(
-                        F.lit(0.15) * F.col("ind") / k
-                        + F.lit(0.85)
-                        * (
-                            F.coalesce("inflow", F.lit(0.0))
-                            + F.col("mass") * F.col("ind") / k
-                        ),
-                        6,
-                    ).alias("pr"),
-                )
-                .localCheckpoint()
-            )
-            trim_pins(spark, base, keep=1)
-    ue.unpersist()
-    verts.unpersist()
+        )
+
+    ranks = pregel(
+        spark, seeds.select("v", (F.col("ind") / k).alias("pr")), iterate, 8
+    )
     return ranks.filter(F.col("pr") > 0.0).select(
         "v", F.col("pr").alias("ppr")
     )
@@ -1195,38 +1131,28 @@ def graph_kcore(spark, sf_dir):
     whose degree in the CURRENT subgraph is < k, repeat — the standard
     community-detection / graph-cleaning primitive. Each round is one
     degree aggregate + two semi-join-shaped filters on the shrinking edge
-    set; per-round state is the live edge frame only (localCheckpoint +
-    trim, VERDICT r6 item 7 discipline). At 100 TB the edge set only
-    shrinks, so the worst round is the first — and peeling converges in
-    O(peel depth) rounds, not O(|V|)."""
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-        .localCheckpoint()
+    set; the state is the live edge frame (one pregel checkpoint per
+    round). At 100 TB the edge set only shrinks, so the worst round is
+    the first — and peeling converges in O(peel depth) rounds, not
+    O(|V|)."""
+    und = _symmetric(user_edges(spark, sf_dir)).select(
+        F.col("src").alias("v"), F.col("dst").alias("n")
     )
-    base = persistent_rdd_ids(spark)
-    cur = und
-    with low_shuffle(spark):
-        for _ in range(_KCORE_ROUNDS):
-            keep = (
-                cur.groupBy("v")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .filter(F.col("d") >= _KCORE_K)
-                .select("v")
-            )
-            cur = (
-                cur.join(F.broadcast(keep), "v")
-                .join(
-                    F.broadcast(keep.select(F.col("v").alias("n"))), "n"
-                )
-                .select("v", "n")
-                .localCheckpoint()
-            )
-            trim_pins(spark, base, keep=1)
+
+    def peel(cur, _):
+        keep = (
+            cur.groupBy("v")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .filter(F.col("d") >= _KCORE_K)
+            .select("v")
+        )
+        return (
+            cur.join(F.broadcast(keep), "v")
+            .join(F.broadcast(keep.select(F.col("v").alias("n"))), "n")
+            .select("v", "n")
+        )
+
+    cur = pregel(spark, und, peel, _KCORE_ROUNDS)
     return cur.groupBy("v").agg(F.count(F.lit(1)).alias("core_degree"))
 
 
@@ -1343,15 +1269,16 @@ def graph_random_walks(spark, sf_dir):
     engines/runs/cluster sizes where true random walks are not. Each
     step is one frontier⋈edges equi-join + a WindowGroupLimit rank-1
     pick; the frontier stays one row per root, so the superstep cost is
-    O(|roots| × avg-degree) and retained state is the live frontier
-    (checkpoint + trim). At 100 TB you run many walks per root by
-    salting the walk id into the hash."""
+    O(|roots| × avg-degree). The length is fixed and each step reads
+    the previous one once, so the steps compose lazily into one plan
+    over the checkpointed edge set and build runs no per-step job (a
+    per-step checkpoint costs an edge broadcast and 3 jobs per step).
+    At 100 TB you run many walks per root by salting the walk id into
+    the hash."""
     from pyspark.sql import Window
 
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
     ue = user_edges(spark, sf_dir).localCheckpoint()
-    base = persistent_rdd_ids(spark)
+    hops = ue.select(F.col("src").alias("cur"), "dst")
     roots = (
         ue.select(F.col("src").alias("v"))
         .filter(F.col("v") % 5 == 0)
@@ -1362,30 +1289,27 @@ def graph_random_walks(spark, sf_dir):
         F.col("v").cast("string").alias("path"),
         F.col("v").alias("cur"),
     )
-    with low_shuffle(spark):
-        for t in range(1, _WALK_LEN + 1):
-            rank = F.md5(
+    for t in range(1, _WALK_LEN + 1):
+        rank = F.md5(
+            F.concat(
+                F.col("root").cast("string"),
+                F.lit(f"|{t}|"),
+                F.col("dst").cast("string"),
+            )
+        )
+        w = Window.partitionBy("root").orderBy(rank, F.col("dst"))
+        walk = (
+            walk.join(hops, "cur")
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") == 1)
+            .select(
+                "root",
                 F.concat(
-                    F.col("root").cast("string"),
-                    F.lit(f"|{t}|"),
-                    F.col("dst").cast("string"),
-                )
+                    F.col("path"), F.lit("-"), F.col("dst").cast("string")
+                ).alias("path"),
+                F.col("dst").alias("cur"),
             )
-            w = Window.partitionBy("root").orderBy(rank, F.col("dst"))
-            walk = (
-                walk.join(ue, walk["cur"] == ue["src"])
-                .withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") == 1)
-                .select(
-                    "root",
-                    F.concat(
-                        F.col("path"), F.lit("-"), F.col("dst").cast("string")
-                    ).alias("path"),
-                    F.col("dst").alias("cur"),
-                )
-                .localCheckpoint()
-            )
-            trim_pins(spark, base, keep=1)
+        )
     return walk.select("root", "path")
 
 
@@ -1565,47 +1489,19 @@ def graph_harmonic_centrality(spark, sf_dir):
     exactly what you do NOT run at 100 TB; seed sampling with a hop cap
     is the standard estimator (contributions are exact small rationals:
     1, 1/2, 1/3 — identical doubles both engines, round(6) on the sum).
-    Each layer is one frontier⋈edges equi-join + an anti-join against
-    the seen set — the BFS superstep shape. All three layer frames are
-    retained to the end (the final union consumes them), so retained
-    state is O(hop cap) — a fixed constant, not per-superstep growth."""
-    ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-        .localCheckpoint()
-    )
-    seeds = und.select(F.col("v").alias("s")).filter(
+    Each layer is one BFS superstep per seed (``_bfs`` keyed by seed):
+    a frontier⋈edges equi-join + an anti-join against the seen set. The
+    seed itself starts the search at depth 0, which is what keeps it out
+    of every layer."""
+    und = scoped_persist(_symmetric(user_edges(spark, sf_dir)))
+    seeds = und.select(F.col("src").alias("s")).filter(
         F.col("s") % 15 == 0
     ).distinct()
-    layers = []
-    with low_shuffle(spark):
-        frontier = (
-            seeds.join(und, seeds["s"] == und["v"])
-            .filter(F.col("n") != F.col("s"))
-            .select("s", F.col("n").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        layers.append(frontier)
-        seen = frontier
-        for _ in range(2):
-            nxt = (
-                seen.join(und, seen["v"] == und["v"])
-                .select("s", F.col("n").alias("nv"))
-                .filter(F.col("nv") != F.col("s"))
-                .select("s", F.col("nv").alias("v"))
-                .distinct()
-                .join(seen, ["s", "v"], "left_anti")
-                .localCheckpoint()
-            )
-            layers.append(nxt)
-            seen = seen.union(nxt).localCheckpoint()
-    contrib = (
-        layers[0].select("v", F.lit(1.0).alias("c"))
-        .unionAll(layers[1].select("v", F.lit(0.5).alias("c")))
-        .unionAll(layers[2].select("v", (F.lit(1.0) / 3).alias("c")))
+    start = seeds.select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
+    seen = _bfs(spark, start, und, 3, keys=["s"])
+    # 1/d is exactly the 1, 1/2, 1/3 doubles the oracle sums
+    contrib = seen.filter(F.col("d") > 0).select(
+        "v", (F.lit(1.0) / F.col("d")).alias("c")
     )
     return contrib.groupBy("v").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_seeds_reaching"),

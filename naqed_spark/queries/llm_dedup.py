@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import load, low_shuffle, scoped_persist, spread
+from naqed_spark.queries._util import load, scoped_persist, spread
 from naqed_spark.queries.llm import _SHINGLES_SQL, _SIG_COLS_SQL, llm_neardup_lsh
 from naqed_spark.registry import query
 
@@ -124,60 +124,18 @@ def llm_dedup_groups(spark, sf_dir):
     (composition: the pairs come from the registered llm_neardup_lsh
     implementation). Emits (doc_id, keep_id, n_members) for every doc that
     appears in at least one near-dup pair; dropping rows with
-    doc_id != keep_id IS the dedup."""
-    pairs = llm_neardup_lsh(spark, sf_dir).select("id_a", "id_b")
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
+    doc_id != keep_id IS the dedup. The labelling is graph.components:
+    the symmetric pair set is built in one pass (the LSH pairs subtree is
+    planned once) and each superstep is one checkpoint whose own job
+    counts the still-changing labels."""
+    from naqed_spark.queries.graph import components
 
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .persist()
+    pairs = llm_neardup_lsh(spark, sf_dir).select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    sym.count()  # materialize the cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label"))
-    )
-    with low_shuffle(spark):
-        converged = False
-        for _ in range(20):
-            msgs = labels.join(sym, labels.v == sym.src).select(
-                F.col("dst").alias("v"), F.col("label")
-            )
-            new_labels = (
-                labels.unionAll(msgs)
-                .groupBy("v")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
-            )
-            if new_labels.join(
-                labels,
-                (new_labels.v == labels.v) & (new_labels.label != labels.label),
-            ).isEmpty():
-                labels = new_labels
-                converged = True
-                break
-            labels = new_labels
-            # prior checkpoint consumed by the convergence join; only the
-            # newest (labels) stays live (VERDICT r6 item 7)
-            trim_pins(spark, base, keep=1)
-        if not converged:
-            # a component with diameter > 20 would otherwise return silently
-            # wrong (non-minimal) labels while the oracle computes the true
-            # transitive closure — fail loudly instead.
-            raise RuntimeError(
-                "llm_dedup_groups: min-label propagation did not converge "
-                "in 20 rounds (near-dup component diameter > 20); raise the "
-                "round cap for this corpus"
-            )
-    sym.unpersist()
+    labels = components(spark, pairs)
     comp = labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("keep_id")
+        F.col("v").alias("doc_id"), F.col("lab").alias("keep_id")
     )
     sizes = comp.groupBy("keep_id").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "keep_id").select("doc_id", "keep_id", "n_members")

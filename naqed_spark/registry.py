@@ -200,6 +200,24 @@ TOUCHED: dict[str, int] = {
     "llm_knn_bruteforce": 17,
     "llm_similarity_threshold_join": 17,
     "llm_contamination_ngram": 17,
+    # r17 rewrite that never got its bump (ROADMAP carried-over)
+    "llm_chunk_windows": 17,
+    # round-18: every fixpoint loop moved onto session.pregel (state
+    # carries its frontier, halt count observed on the checkpoint job,
+    # one-pass symmetric edges; walks compose lazily)
+    "graph_reachability_bfs": 18,
+    "graph_shortest_path_weighted": 18,
+    "graph_connected_components": 18,
+    "graph_pagerank_fixed": 18,
+    "graph_scc": 18,
+    "graph_personalized_pagerank": 18,
+    "graph_kcore": 18,
+    "graph_random_walks": 18,
+    "graph_harmonic_centrality": 18,
+    "compiler_traverse_reachable": 18,
+    "compiler_traverse_edges": 18,
+    "compiler_traverse_cheapest": 18,
+    "llm_dedup_groups": 18,
 }
 
 # Keys registered WHILE a verification backlog is outstanding (VERDICT

@@ -10,9 +10,14 @@ deterministic across engines.
 
 from __future__ import annotations
 
+import logging
 import os
+import time
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "naqed-spark") -> SparkSession:
@@ -69,8 +74,10 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     persist). The long-session hygiene surface: query builders that must
     eagerly checkpoint (blocked vector kernels, two-phase global rank) pin
     result-sized frames here for as long as their result may be consumed."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
+    # one py4j round trip for the whole id set: iterating the Java array
+    # costs one round trip per element
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(k) for k in ids.split(",") if k}
 
 
 def unpersist_rdds(spark: SparkSession, ids) -> int:
@@ -87,19 +94,87 @@ def unpersist_rdds(spark: SparkSession, ids) -> int:
     return n
 
 
-def trim_pins(spark: SparkSession, base: set[int], keep: int) -> int:
-    """Free every pinned RDD created since ``base`` except the ``keep``
-    newest — the per-superstep hygiene call for fixpoint loops (VERDICT r6
-    item 7): each iteration's eager ``localCheckpoint`` supersedes the
-    prior one, so retained block-storage state stays O(keep) instead of
-    O(supersteps). RDD ids increase monotonically with creation, so
-    "newest" is well-defined. Caller contract: every still-live checkpoint
-    must be among the ``keep`` newest pins, and any long-lived ``persist``
-    cache (edge frames joined every round) must be materialized BEFORE
-    ``base`` is captured so it can't be swept."""
-    mine = persistent_rdd_ids(spark) - base
-    live = set(sorted(mine)[-keep:]) if keep > 0 else set()
-    return unpersist_rdds(spark, mine - live)
+def checkpoint_rdd_id(df: DataFrame) -> "int | None":
+    """Id of the pinned RDD behind a ``localCheckpoint()`` frame (None for
+    any other frame) — what lets a loop release exactly the checkpoint it
+    superseded instead of sweeping everything pinned since a baseline."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    return plan.rdd().id()
+
+
+@contextmanager
+def low_shuffle(spark: SparkSession, n: int = 8):
+    """Cap shuffle parallelism at ``n`` for driver-side iterative loops
+    whose per-step data is tiny — task-launch overhead dominates there.
+    Never raises the session's own setting (a 4-core session stays at 4).
+    Only actions that EXECUTE inside the block see it; the query's final
+    lazy DataFrame still runs at the session setting."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(n, int(prev))))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+class FixpointError(RuntimeError):
+    """A ``pregel`` loop still had active rows after its superstep cap —
+    stopping there would return a silently wrong (unconverged) result."""
+
+
+def pregel(spark: SparkSession, state: DataFrame, step, max_steps: int,
+           active=None) -> DataFrame:
+    """The one superstep driver for every fixpoint loop (BSP, as Pregelix
+    runs it: each superstep is a join plus group-by over the vertex and
+    message relations). ``step(state, i)`` builds superstep ``i``'s state
+    lazily from the previous one (1-based); the driver runs exactly ONE
+    eager ``localCheckpoint`` per superstep — lineage stays one step deep
+    — and releases the checkpoint it superseded by that checkpoint's own
+    RDD id, so retained state is O(1) and caches the step materializes
+    on first use (edge sets) are never swept.
+
+    ``active`` (a Column, or ``i -> Column``) marks the rows still doing
+    work in the new state; its count is observed on the checkpoint job
+    itself (``Observation``), so the halt test costs no extra Spark job.
+    The loop halts when no row is active and raises ``FixpointError`` if
+    rows are still active after ``max_steps``. A loop whose cap is part
+    of its definition (depth-bounded BFS) says so by returning
+    ``F.lit(False)`` at the cap. ``active=None`` runs exactly
+    ``max_steps`` supersteps.
+
+    The returned frame carries ``supersteps``: one ``(active rows, ms)``
+    pair per superstep (active is None for fixed-length loops)."""
+    name = getattr(step, "__name__", "step")
+    record, n = [], None
+    superseded = None  # the caller's initial state is never released
+    with low_shuffle(spark):
+        for i in range(1, max_steps + 1):
+            t0 = time.perf_counter()
+            nxt = step(state, i)
+            if active is not None:
+                obs = Observation()
+                cond = active(i) if callable(active) else active
+                nxt = nxt.observe(obs, F.count_if(cond).alias("n"))
+            state = nxt.localCheckpoint()
+            n = obs.get["n"] if active is not None else None
+            if superseded is not None:
+                unpersist_rdds(spark, [superseded])
+            superseded = checkpoint_rdd_id(state)
+            record.append((n, round((time.perf_counter() - t0) * 1000, 1)))
+            _log.debug("pregel %s superstep %d: %s active, %.1f ms",
+                       name, i, *record[-1])
+            if n == 0:
+                break
+        else:
+            if active is not None:
+                raise FixpointError(
+                    f"{name}: {n} rows still active after {max_steps}"
+                    f" supersteps"
+                )
+    state.supersteps = record
+    return state
 
 
 def release_checkpoints(spark: SparkSession) -> int:

@@ -9,7 +9,7 @@ py4j fetch of the answer. Per key:
   - ``compile``: best-of-2 DataFrame build + full Catalyst/physical planning
     — the per-fresh-plan constant. CAVEAT (r16 review): builders are not
     all job-free — iterative keys (bfs, pagerank, shortest-path, cc,
-    kcore, walks) run their fixpoint supersteps DURING build, and the
+    kcore) run their fixpoint supersteps DURING build, and the
     knn fast path collects its block at build time, so for those keys
     "compile" includes real execution and the compile/exec split is not
     meaningful; read their ``wall`` instead.

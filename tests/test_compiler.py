@@ -7119,3 +7119,90 @@ def test_sketch_split_resolves_dotted_group_keys(eng):
     assert "Join" in _formatted_plan(eng, df)  # split fired
     assert df.columns == ["g.dot", "n", "a"]
     assert df.count() > 0
+
+
+# --- $asof payload prune: the referenced-name set ---------------------------
+_ASOF_REF_SPEC = {
+    "events": {
+        "$filter": {"value": {"$gt": 0}},
+        "event_id": True,
+        "orders": {
+            "$asof": {
+                "$left_on": "ts",
+                "$right_on": "o_orderdate",
+                "$per": "event_id",
+                "$tiebreak": "o_orderkey",
+            },
+            "o_totalprice": True,
+        },
+        "customer": {"$theta": [["ts", "$gte", "c_acctbal"]]},
+        "$select": {"x": {"$add": ["o_shippriority", 1]}},
+        "$orderby": [["o_orderstatus", "desc"]],
+    }
+}
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize(
+    "name",
+    [
+        "value",                                     # $filter key
+        "o_shippriority",                            # $select reference
+        "o_orderstatus",                             # $orderby column
+        "c_acctbal",                                 # $theta operand
+        "ts", "o_orderdate", "event_id", "o_orderkey",  # $asof fields
+        "o_totalprice",                              # plain field request
+    ],
+)
+def test_asof_prune_sees_every_reference_position(name):
+    """The inner-$asof payload prune keeps a column only when its name
+    reaches _collect_spec_strings as a standalone string; a reference
+    position that nested its names (say a tuple key or a joined string)
+    would let the prune drop a referenced column."""
+    from naqed_spark.compiler.engine import _collect_spec_strings
+
+    assert name in _collect_spec_strings(_ASOF_REF_SPEC, set())
+
+
+def test_interleaved_queries_on_one_engine_match_separate_builds(
+    eng, monkeypatch
+):
+    """The $asof payload prune's referenced-name set travels through the
+    compile arguments, not Engine state: a second query built on the
+    same Engine in the middle of the first one's compilation must not
+    change what the first one keeps."""
+    import naqed_spark.compiler.engine as engine_mod
+
+    a = {
+        "events": {
+            "event_id": True,
+            "orders": {
+                "$asof": {
+                    "$left_on": "ts",
+                    "$right_on": "o_orderdate",
+                    "$per": "event_id",
+                    "$tiebreak": "o_orderkey",
+                },
+                "o_totalprice": True,
+            },
+        }
+    }
+    b = {"nation": {"n_name": True}}
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want_a = rows(Engine(eng.spark, SF_DIR).query(a))
+    want_b = rows(Engine(eng.spark, SF_DIR).query(b))
+    parse = engine_mod.parse_query
+    got_b = []
+
+    def parse_with_b_inside(spec):
+        if not got_b and "events" in spec:
+            got_b.append(rows(eng.query(b)))
+        return parse(spec)
+
+    monkeypatch.setattr(engine_mod, "parse_query", parse_with_b_inside)
+    got_a = rows(eng.query(a))
+    assert got_b == [want_b]
+    assert got_a == want_a and got_a

@@ -151,3 +151,90 @@ def test_fixpoint_loops_pinned_rdds_flat(spark):
             f"{key}: checkpoint leak — {len(mine)} new pinned RDDs"
         )
         unpersist_rdds(spark, mine)
+
+
+@pytest.mark.quick
+def test_pregel_chain_halts_after_diameter_plus_one_with_no_extra_jobs(
+    spark, monkeypatch
+):
+    """The superstep driver on a chain 0→1→…→D: BFS reaches every vertex
+    in D supersteps and the (D+1)-th finds no frontier and halts. The
+    halt count is observed on the checkpoint job, so isEmpty/count/
+    collect may not run inside the loop, and the superseded checkpoint
+    is released every superstep, so the pinned-RDD count stays flat."""
+    from pyspark.sql import functions as F
+
+    from naqed_spark import session
+    from naqed_spark.queries.graph import _bfs
+    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
+
+    diameter = 6
+    edges = spark.range(diameter).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    start = spark.range(1).select(F.col("id").alias("v"), F.lit(0).alias("d"))
+    before = persistent_rdd_ids(spark)
+    pinned = []
+
+    def banned(*_a, **_k):
+        raise AssertionError("an extra Spark job ran inside the loop")
+
+    real_id = session.checkpoint_rdd_id
+
+    def id_after_release(df):
+        # pregel asks for the new checkpoint's id once per superstep,
+        # right after releasing the one it superseded
+        pinned.append(len(persistent_rdd_ids(spark) - before))
+        return real_id(df)
+
+    with monkeypatch.context() as m:
+        for name in ("isEmpty", "count", "collect"):
+            m.setattr(type(start), name, banned)
+        m.setattr(session, "checkpoint_rdd_id", id_after_release)
+        out = _bfs(spark, start, edges, 100)
+
+    assert [n for n, _ in out.supersteps] == [1] * diameter + [0]
+    assert pinned == [1] * (diameter + 1)  # only the live state checkpoint
+    assert {r["v"]: r["d"] for r in out.collect()} == {
+        v: v for v in range(diameter + 1)
+    }
+    unpersist_rdds(spark, persistent_rdd_ids(spark) - before)
+
+
+@pytest.mark.quick
+def test_pregel_cap_raises_and_fixed_loops_run_every_step(spark):
+    """Active rows left at the cap raise FixpointError (an unconverged
+    result is never returned); a loop without ``active`` runs exactly
+    ``max_steps`` supersteps and reports no active counts."""
+    from pyspark.sql import functions as F
+
+    from naqed_spark.session import FixpointError, pregel
+
+    start = spark.range(3).select(F.col("id").alias("x"))
+
+    def inc(df, _):
+        return df.select((F.col("x") + 1).alias("x"))
+
+    with pytest.raises(FixpointError, match="after 4 supersteps"):
+        pregel(spark, start, inc, 4, active=F.col("x") < 100)
+    out = pregel(spark, start, inc, 4)
+    assert [n for n, _ in out.supersteps] == [None] * 4
+    assert sorted(r["x"] for r in out.collect()) == [4, 5, 6]
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize("session_n, want", [("4", "4"), ("16", "8")])
+def test_low_shuffle_never_raises_the_session_setting(spark, session_n, want):
+    """low_shuffle caps superstep parallelism at 8; on a session set
+    below that (a small host) it must keep the session's own value."""
+    from naqed_spark.session import low_shuffle
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, session_n)
+    try:
+        with low_shuffle(spark):
+            assert spark.conf.get(key) == want
+        assert spark.conf.get(key) == session_n
+    finally:
+        spark.conf.set(key, prev)
